@@ -2788,169 +2788,176 @@ def main(argv: list[str] | None = None) -> int:
         # config file) — the operator-error contract, not a traceback
         print(f"run: {exc}", file=sys.stderr)
         return 2
-    # run_id-stamped so many runs' verdicts union into the exact shape
-    # `history` (plans/lineage.verdict_history) consumes
-    write_table(
-        res.verdicts.withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/verdicts",
-        partition_by=None,
-    )
-    write_table(res.violations, f"{args.out}/violations", partition_by=None)
-    # the binary __hll sketch columns are persisted ON PURPOSE: they are
-    # what makes `rollup` a metadata-sized aggregation instead of a
-    # rescan (B6 mergeable-sketch requirement); run_id-stamped so many
-    # runs' stats union into the `trend` (metric_trend) history shape
-    write_table(
-        res.stats.withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/stats",
-        partition_by=None,
-    )
-    # observed-schema fingerprint (C59): run_id-stamped so many runs'
-    # frames union into the `history --schemas` evolution shape
-    from bigdime_spark.schema import schema_fingerprint
-
-    write_table(
-        schema_fingerprint(raw).withColumn("run_id", F.lit(res.run_id)),
-        f"{args.out}/schema",
-        partition_by=None,
-    )
-    if res.grouped_profiles:
-        # cross-run GROUPED history surface (C73): each GroupedBound's
-        # per-(part, group) profile — already computed and persisted by
-        # the run, zero extra scans — lands run_id-stamped in
-        # <out>/grouped with part composed as "part|dim=value" and
-        # metrics as stat__<target>__<metric> columns. Many runs' frames
-        # union straight into `trend --history` / `outliers --stats`,
-        # so every cross-run baseline (step, zscore, ewma, hw, cusum)
-        # gates SEGMENT metrics with no new scoring code.
-        from bigdime_spark.operators.grouped import composed_grouped_frame
-
-        stamped = None
-        for (target, group_by), prof in sorted(res.grouped_profiles.items()):
-            frame = composed_grouped_frame(prof, target, group_by)
-            stamped = (
-                frame
-                if stamped is None
-                else stamped.unionByName(frame, allowMissingColumns=True)
-            )
+    # the suite's persisted frames are released once every output is
+    # written: in-process callers (tests, notebooks, repeated runs)
+    # would otherwise pile up cached blocks and replay plan-matched
+    # caches on the next run
+    try:
+        # run_id-stamped so many runs' verdicts union into the exact shape
+        # `history` (plans/lineage.verdict_history) consumes
         write_table(
-            stamped.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/grouped",
+            res.verdicts.withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/verdicts",
             partition_by=None,
         )
-
-    if args.kmv_keys:
-        # per-part bottom-k key sketches (C68): run_id-stamped so many
-        # runs' frames union into the `history --kmv` churn shape
-        from bigdime_spark.operators.kmv import kmv_stamp
-
-        try:
-            stamped = kmv_stamp(
-                raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
-            )
-        except ValueError as exc:
-            print(f"run: {exc}", file=sys.stderr)
-            return 2
+        write_table(res.violations, f"{args.out}/violations", partition_by=None)
+        # the binary __hll sketch columns are persisted ON PURPOSE: they are
+        # what makes `rollup` a metadata-sized aggregation instead of a
+        # rescan (B6 mergeable-sketch requirement); run_id-stamped so many
+        # runs' stats union into the `trend` (metric_trend) history shape
         write_table(
-            stamped.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/kmv",
+            res.stats.withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/stats",
             partition_by=None,
         )
+        # observed-schema fingerprint (C59): run_id-stamped so many runs'
+        # frames union into the `history --schemas` evolution shape
+        from bigdime_spark.schema import schema_fingerprint
 
-    # one row per partition can be 10^6+ at scale — the four summary
-    # numbers are a single aggregate, never a full-frame collect
-    summary = res.lineage.agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.coalesce(F.sum("rows_scanned"), F.lit(0)).alias("rows_scanned"),
-        F.count_if(F.col("status") == "FAILED").alias("n_failed"),
-    ).collect()[0]
-    n_parts = summary["n_parts"]
-    rows_scanned = summary["rows_scanned"]
-    n_failed = summary["n_failed"]
-    n_violations = res.violations.count()
-
-    # violation-slice triage (C69): WHICH value segments concentrate
-    # the run's row violations. The violating-id set is bounded
-    # (--topk-violations at scale) and broadcast back onto the raw
-    # snapshot, so the corpus never shuffles; the slices frame is
-    # metadata-scale (Σ dim cardinalities) and persisted only across
-    # its write + the 1-row top-lift collect.
-    slice_top = None
-    if slice_dims:
-        from bigdime_spark.operators.slices import violation_slices
-
-        viol_ids = (
-            res.violations.filter(F.col("image_id").isNotNull())
-            .select("image_id")
-            .distinct()
-            .withColumn("_viol", F.lit(True))
-        )
-        flagged = raw.join(F.broadcast(viol_ids), "image_id", "left")
-        slices = violation_slices(
-            flagged,
-            F.col("_viol"),
-            slice_dims,
-            min_support=args.slice_min_support,
-            include_pairs=args.slice_pairs,
-        ).persist()
         write_table(
-            slices.withColumn("run_id", F.lit(res.run_id)),
-            f"{args.out}/slices",
+            schema_fingerprint(raw).withColumn("run_id", F.lit(res.run_id)),
+            f"{args.out}/schema",
             partition_by=None,
         )
-        top = (
-            slices.filter(F.col("lift").isNotNull())
-            .orderBy(
-                F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+        if res.grouped_profiles:
+            # cross-run GROUPED history surface (C73): each GroupedBound's
+            # per-(part, group) profile — already computed and persisted by
+            # the run, zero extra scans — lands run_id-stamped in
+            # <out>/grouped with part composed as "part|dim=value" and
+            # metrics as stat__<target>__<metric> columns. Many runs' frames
+            # union straight into `trend --history` / `outliers --stats`,
+            # so every cross-run baseline (step, zscore, ewma, hw, cusum)
+            # gates SEGMENT metrics with no new scoring code.
+            from bigdime_spark.operators.grouped import composed_grouped_frame
+
+            stamped = None
+            for (target, group_by), prof in sorted(res.grouped_profiles.items()):
+                frame = composed_grouped_frame(prof, target, group_by)
+                stamped = (
+                    frame
+                    if stamped is None
+                    else stamped.unionByName(frame, allowMissingColumns=True)
+                )
+            write_table(
+                stamped.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/grouped",
+                partition_by=None,
             )
-            .limit(1)
-            .collect()
-        )
-        slices.unpersist()
-        if top:
-            slice_top = {
-                "dim": top[0]["dim"],
-                "value": top[0]["value"],
-                "lift": top[0]["lift"],
-                "n_viol": top[0]["n_viol"],
-            }
 
-    # reference lifecycle parity: a FAILED validation quarantines the
-    # offending input unit [PK, SURVEY A10/A14]. The engine's analogue
-    # is a machine-readable quarantine manifest — one row per failed
-    # partition with the constraints that failed it — NOT a data copy
-    # (at 10^12 rows quarantine-by-copy is its own outage; consumers
-    # prune the listed partitions instead).
-    quarantined = 0
-    if n_failed and not args.no_quarantine:
-        q = (
-            res.verdicts.filter((F.col("verdict") == "FAIL") & (F.col("part") != "*"))
-            .groupBy("part")
-            .agg(F.sort_array(F.collect_set("constraint")).alias("failed_constraints"))
-            .select(F.lit(res.run_id).alias("run_id"), "part", "failed_constraints")
-        )
-        write_table(q, f"{args.out}/quarantine", partition_by=None)
-        quarantined = n_failed
+        if args.kmv_keys:
+            # per-part bottom-k key sketches (C68): run_id-stamped so many
+            # runs' frames union into the `history --kmv` churn shape
+            from bigdime_spark.operators.kmv import kmv_stamp
 
-    wall = time.monotonic() - t0
-    print(
-        json.dumps(
-            {
-                "cmd": "run",
-                "run_id": res.run_id,
-                "parts_validated": n_parts,
-                "parts_failed": n_failed,
-                "rows_scanned": rows_scanned,
-                "violations": n_violations,
-                "schema_mismatches": len(res.schema_violations),
-                "parts_quarantined": quarantined,
-                **({"slice_top": slice_top} if slice_dims else {}),
-                "images_per_sec": round(rows_scanned / wall, 1) if wall > 0 else None,
-                "wall_sec": round(wall, 2),
-            }
+            try:
+                stamped = kmv_stamp(
+                    raw, "part", tuple(args.kmv_keys.split(",")), k=args.kmv_k
+                )
+            except ValueError as exc:
+                print(f"run: {exc}", file=sys.stderr)
+                return 2
+            write_table(
+                stamped.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/kmv",
+                partition_by=None,
+            )
+
+        # one row per partition can be 10^6+ at scale — the four summary
+        # numbers are a single aggregate, never a full-frame collect
+        summary = res.lineage.agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.coalesce(F.sum("rows_scanned"), F.lit(0)).alias("rows_scanned"),
+            F.count_if(F.col("status") == "FAILED").alias("n_failed"),
+        ).collect()[0]
+        n_parts = summary["n_parts"]
+        rows_scanned = summary["rows_scanned"]
+        n_failed = summary["n_failed"]
+        n_violations = res.violations.count()
+
+        # violation-slice triage (C69): WHICH value segments concentrate
+        # the run's row violations. The violating-id set is bounded
+        # (--topk-violations at scale) and broadcast back onto the raw
+        # snapshot, so the corpus never shuffles; the slices frame is
+        # metadata-scale (Σ dim cardinalities) and persisted only across
+        # its write + the 1-row top-lift collect.
+        slice_top = None
+        if slice_dims:
+            from bigdime_spark.operators.slices import violation_slices
+
+            viol_ids = (
+                res.violations.filter(F.col("image_id").isNotNull())
+                .select("image_id")
+                .distinct()
+                .withColumn("_viol", F.lit(True))
+            )
+            flagged = raw.join(F.broadcast(viol_ids), "image_id", "left")
+            slices = violation_slices(
+                flagged,
+                F.col("_viol"),
+                slice_dims,
+                min_support=args.slice_min_support,
+                include_pairs=args.slice_pairs,
+            ).persist()
+            write_table(
+                slices.withColumn("run_id", F.lit(res.run_id)),
+                f"{args.out}/slices",
+                partition_by=None,
+            )
+            top = (
+                slices.filter(F.col("lift").isNotNull())
+                .orderBy(
+                    F.desc("lift"), F.desc("n_viol"), F.asc("dim"), F.asc("value")
+                )
+                .limit(1)
+                .collect()
+            )
+            slices.unpersist()
+            if top:
+                slice_top = {
+                    "dim": top[0]["dim"],
+                    "value": top[0]["value"],
+                    "lift": top[0]["lift"],
+                    "n_viol": top[0]["n_viol"],
+                }
+
+        # reference lifecycle parity: a FAILED validation quarantines the
+        # offending input unit [PK, SURVEY A10/A14]. The engine's analogue
+        # is a machine-readable quarantine manifest — one row per failed
+        # partition with the constraints that failed it — NOT a data copy
+        # (at 10^12 rows quarantine-by-copy is its own outage; consumers
+        # prune the listed partitions instead).
+        quarantined = 0
+        if n_failed and not args.no_quarantine:
+            q = (
+                res.verdicts.filter((F.col("verdict") == "FAIL") & (F.col("part") != "*"))
+                .groupBy("part")
+                .agg(F.sort_array(F.collect_set("constraint")).alias("failed_constraints"))
+                .select(F.lit(res.run_id).alias("run_id"), "part", "failed_constraints")
+            )
+            write_table(q, f"{args.out}/quarantine", partition_by=None)
+            quarantined = n_failed
+
+        wall = time.monotonic() - t0
+        print(
+            json.dumps(
+                {
+                    "cmd": "run",
+                    "run_id": res.run_id,
+                    "parts_validated": n_parts,
+                    "parts_failed": n_failed,
+                    "rows_scanned": rows_scanned,
+                    "violations": n_violations,
+                    "schema_mismatches": len(res.schema_violations),
+                    "parts_quarantined": quarantined,
+                    **({"slice_top": slice_top} if slice_dims else {}),
+                    "images_per_sec": round(rows_scanned / wall, 1) if wall > 0 else None,
+                    "wall_sec": round(wall, 2),
+                }
+            )
         )
-    )
-    return 1 if (n_failed or res.schema_violations) else 0
+        return 1 if (n_failed or res.schema_violations) else 0
+    finally:
+        res.release()
 
 
 if __name__ == "__main__":

@@ -578,12 +578,36 @@ class ValidationSuite:
         # the cached per-part stats double as the ProfileOutliers input
         # (and any extra table constraint that wants them) — zero rescan
         ctx.extras["fused_stats"] = fused
+        specs = [
+            (c.name, c.violation_spec(), c.violation_count_col())
+            for c in agg_constraints
+        ]
+        fusable = [(n, s, cc) for n, s, cc in specs if s is not None]
         # materialize NOW: a dozen verdict branches reference this
         # frame inside one union action, and branches hitting a
         # not-yet-materialized cache each recompute its plan (the
         # stats+checksum scans) — eager materialization runs it once.
-        fused.count()
-        mark("pass3 fused stats+constraints agg")
+        if fusable and all(cc is not None for _, _, cc in fusable):
+            # rescan gate: the fused agg (cached, one row per part)
+            # already counts each fusable constraint's violating rows —
+            # drop every spec whose counter totals ZERO before the
+            # row-level rescan (a provably-clean constraint contributes
+            # nothing but cost: in particular a clean PayloadConformance
+            # spec would otherwise drag payload pages into a rescan
+            # another constraint triggered). All counters zero → the
+            # rescan itself is provably empty and skipped entirely; the
+            # common clean run at 10^12 rows pays ONE scan, not two.
+            # Its collect reads every cached partition, so it is also
+            # the job that materializes the cache.
+            totals = fused.agg(
+                *[F.sum(cc).alias(cc) for _, _, cc in fusable]
+            ).collect()[0]
+            fusable = [
+                (n, s, cc) for n, s, cc in fusable if (totals[cc] or 0) > 0
+            ]
+        else:
+            fused.count()
+        mark("pass3 fused stats+constraints agg (+ violation-rescan gate)")
 
         # long-format verdicts via inline(array(struct(...)))
         structs = [
@@ -618,29 +642,6 @@ class ValidationSuite:
         # one filtered scan per constraint.
         verdict_frames_head = [schema_verdict_df]
         violation_frames = [schema_viol_df]
-        specs = [
-            (c.name, c.violation_spec(), c.violation_count_col())
-            for c in agg_constraints
-        ]
-        fusable = [(n, s, cc) for n, s, cc in specs if s is not None]
-        if fusable:
-            # rescan gate: the fused agg (cached, one row per part)
-            # already counts each fusable constraint's violating rows —
-            # drop every spec whose counter totals ZERO before the
-            # row-level rescan (a provably-clean constraint contributes
-            # nothing but cost: in particular a clean PayloadConformance
-            # spec would otherwise drag payload pages into a rescan
-            # another constraint triggered). All counters zero → the
-            # rescan itself is provably empty and skipped entirely; the
-            # common clean run at 10^12 rows pays ONE scan, not two.
-            if all(cc is not None for _, _, cc in fusable):
-                totals = fused.agg(
-                    *[F.sum(cc).alias(cc) for _, _, cc in fusable]
-                ).collect()[0]
-                fusable = [
-                    (n, s, cc) for n, s, cc in fusable if (totals[cc] or 0) > 0
-                ]
-            mark("pass3b violation-rescan gate")
         if fusable:
             structs = [
                 F.when(
@@ -837,6 +838,10 @@ class ValidationSuite:
             F.lit(wall_ms).cast("long").alias("wall_ms"),
         )
         if store is not None:
+            # parts-sized; the append and the caller's summary both read
+            # it — persisted so the verdict/violation roll-ups run once
+            lineage = lineage.persist()
+            persisted.append(lineage)
             store.append(lineage)
 
         return SuiteResult(

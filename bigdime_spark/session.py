@@ -2,8 +2,11 @@
 
 Every knob here exists for the 100 TB posture (SURVEY.md §2.5/§4):
 AQE for runtime re-planning + skew-join splitting, Arrow for the
-JVM↔Python boundary, and a shuffle-partition count sized to the
-parallelism level rather than Spark's static default of 200.
+JVM↔Python boundary, and a fixed shuffle-partition count of 32 (not
+Spark's static default of 200) that AQE coalesces down to what each
+shuffle's bytes need — inside cached plans too, so a frame persisted
+from a tiny aggregate does not carry 32 partitions into every frame
+built from it.
 """
 
 from __future__ import annotations
@@ -33,6 +36,17 @@ ENGINE_CONFS: dict[str, str] = {
     # 128m default is right, in local[32] smaller splits help.
     "spark.sql.files.maxPartitionBytes": "64m",
     "spark.sql.shuffle.partitions": "32",
+    # let AQE coalesce the final shuffle of a CACHED plan too (Spark
+    # leaves this off so a cached frame keeps its hash partitioning).
+    # With it off, the suite's per-part cache (one row per part) kept
+    # all 32 shuffle partitions and every frame derived from it
+    # inherited them: verdict grids, lineage joins, and the persisted
+    # verdict/violation unions (a union's partition count is the sum
+    # of its children's) ran 68-task stages over a few dozen rows. A
+    # cold 16-part incremental run went from 760 suite tasks to 155
+    # (4-core local mode). Large cached frames keep their
+    # parallelism: AQE still sizes partitions by bytes.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # deterministic session timezone so timestamp-derived hashes are stable
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",

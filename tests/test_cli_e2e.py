@@ -97,6 +97,27 @@ def test_run_without_phash_flag_passes_clean_fixture(spark, tmp_path_factory, ca
     assert verdicts.filter(F.col("constraint").startswith("phash")).count() == 0
 
 
+def test_run_releases_persisted_frames(spark, tmp_path_factory, capsys):
+    """An in-process `run` must unpersist every frame the suite cached
+    once its outputs are written: a leaked cache piles up blocks and is
+    silently replayed by the next plan-matched run."""
+    fx = str(tmp_path_factory.mktemp("fx_rel"))
+    out = str(tmp_path_factory.mktemp("out_rel"))
+    rc, _, _ = _run_cli(
+        capsys, ["synth", "--rows", "128", "--parts", "4", "--out", fx]
+    )
+    assert rc == 0
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rc, summary, _ = _run_cli(
+        capsys,
+        ["run", "--raw", f"{fx}/raw", "--curated", f"{fx}/curated",
+         "--manifest", f"{fx}/manifest", "--out", out,
+         "--lineage", f"{out}/lineage"],
+    )
+    assert rc == 0 and summary["parts_validated"] == 4
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_run_fd_and_seq_continuity_flags(spark, tmp_path_factory, capsys):
     """--fd image_id:phash PASSes (unique ids determine anything);
     --seq-continuity phash FAILs every part (a hash space is nowhere

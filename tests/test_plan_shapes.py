@@ -74,6 +74,33 @@ def test_manifest_join_broadcasts(spark, parquet_fixture):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_cached_per_part_frame_coalesces_below_shuffle_partitions(
+    spark, parquet_fixture
+):
+    """The suite caches its fused agg (one row per part); at the
+    production shuffle.partitions=32 AQE must coalesce that cached
+    plan's shuffle too, or every frame derived from it (verdict grid,
+    lineage joins, persisted unions) fans out to 32+ tasks per stage
+    over a handful of rows."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        raw = spark.read.parquet(f"{parquet_fixture}/raw")
+        man = spark.read.parquet(f"{parquet_fixture}/manifest")
+        res = ValidationSuite(
+            check_drift=False, check_caption=False, check_referential=False,
+        ).run(spark, raw, manifest=man, run_id="plan-coalesce")
+        try:
+            fused = [p for p in res.persisted if "stat__rows" in p.columns]
+            assert len(fused) == 1
+            n = fused[0].rdd.getNumPartitions()
+            assert n <= spark.sparkContext.defaultParallelism, n
+        finally:
+            res.release()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_fused_agg_has_partial_aggregation(spark, parquet_fixture):
     """The one groupBy(part) pass must do map-side partial aggregation
     (HashAggregate appears twice per agg: partial then final after the
